@@ -871,7 +871,7 @@ object Dedup {
       //    Deterministic: the probed bucket is the lowest existing id.
       val emitClean: Boolean = ph("emit probe") {
         val probeBucket = (0 until buckets)
-          .find(m => graft.util.Fs.exists(s, s"$base/occ/b=$m"))
+          .find(m => graft.util.Fs.exists(s"$base/occ/b=$m"))
         probeBucket.forall { m =>
           val r = s.read.parquet(s"$base/occ/b=$m")
             .groupBy(col("h")).agg(count(lit(1)).as("n"))
@@ -925,7 +925,7 @@ object Dedup {
       val posDir = if (emitClean) "clean" else "rep"
       ph("bucket merges")(graft.util.Jobs.inPool(SubPoolWidth)((0 until buckets).map(m => () => {
         val bp = s"$base/occ/b=$m"
-        if (graft.util.Fs.exists(s, bp)) {
+        if (graft.util.Fs.exists(bp)) {
           val rows = s.read.parquet(bp)
           val pos =
             if (emitClean)
@@ -957,7 +957,7 @@ object Dedup {
       //    buckets² RPCs at the 65536-bucket cap).
       val posByDb: Map[Int, Seq[String]] = (0 until buckets)
         .flatMap { m =>
-          graft.util.Fs.listDirs(s, s"$base/$posDir/m$m").collect {
+          graft.util.Fs.listDirs(s"$base/$posDir/m$m").collect {
             case n if n.startsWith("db=") =>
               (n.stripPrefix("db=").toInt, s"$base/$posDir/m$m/$n")
           }
@@ -965,7 +965,7 @@ object Dedup {
         .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
       val islandDbs: Set[Int] =
         if (emitClean)
-          graft.util.Fs.listDirs(s, s"$base/lens")
+          graft.util.Fs.listDirs(s"$base/lens")
             .collect { case n if n.startsWith("db=") => n.stripPrefix("db=").toInt }
             .toSet
         else posByDb.keySet
@@ -982,7 +982,7 @@ object Dedup {
         }
       })))
       // 4. verdict assembly on O(docs) slim rows; EAGER
-      val covPaths = graft.util.Fs.listDirs(s, s"$base/cov")
+      val covPaths = graft.util.Fs.listDirs(s"$base/cov")
         .collect { case n if n.startsWith("db") => s"$base/cov/$n" }
       val spans =
         if (covPaths.nonEmpty) s.read.parquet(covPaths: _*)
@@ -993,7 +993,7 @@ object Dedup {
         case Some(v) => s.conf.set(cw, v)
         case None => s.conf.unset(cw)
       }
-      graft.util.Fs.delete(s, base)
+      graft.util.Fs.delete(base)
     }
   }
 
@@ -1704,7 +1704,7 @@ object Dedup {
       // generated sf1 (500 k docs) that meant 39 M simhash band pairs
       // (79 s), a winnow pair join measured at 198.6 s, and a 41 M-row
       // union distinct (21 s), of which verification then killed 99.9%
-      // (truth = 50 k rows; tools/Prof `famrecall`, PERF.md r12).
+      // (truth = 50 k rows; PERF.md r12).
       // Verification is a pure per-pair predicate over the capped
       // shingle universe, so for ANY candidate set C:
       //   verify(C) = C ∩ P,  P = all pairs sharing ≥1 capped shingle
@@ -2695,88 +2695,5 @@ object Dedup {
       SELECT vec_a, vec_b, ${graft.util.Exact.sqlFix("cos_raw", 6)} AS cos
       FROM scored WHERE cos_raw >= 0.25
       ORDER BY vec_a, vec_b""")
-  }
-
-  /** Phase profile of q_llm_dedup_family_recall (tools/Prof `famrecall`):
-    * the same pipeline as the entry, with each Store-checkpoint forced
-    * and timed separately so perf work targets the measured phase, not
-    * the guessed one (bench-protocol rule). Measurement-only — not part
-    * of the engine surface. */
-  private[graft] def profileFamilyRecall(s: SparkSession, dir: String): Unit = {
-    def time[A](tag: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[prof] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%8.1f s")
-      r
-    }
-    val d = docs(s, dir)
-    val ckBase = s"${graft.sinks.Sinks.tmpBase}/family_recall_prof"
-    graft.sinks.Sinks.truncate(ckBase)
-    val ck = graft.util.Checkpointer.Store(ckBase)
-    val raw = time("raw shingles ck")(ck(shingleStreamOf(d)))
-    println(s"[prof]   raw rows = ${raw.count()}")
-    val dfreq = raw.groupBy(col("sg")).agg(count(lit(1)).as("f"))
-    val nC = corpusCountOf(d)
-    val ex = time("ex (cap join) ck")(ck(raw.join(cappedDfreq(dfreq, nC), "sg")
-      .select(col("doc_id"), col("sg"))))
-    println(s"[prof]   ex rows = ${ex.count()}")
-    val sizes = ex.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val co = ex.alias("a").join(ex.alias("b"),
-        col("a.sg") === col("b.sg") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("i"))
-    val p = time("P co+verify ck")(ck(co
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
-      .where(expr("2 * i >= na + nb - i"))
-      .select(col("doc_a"), col("doc_b"))))
-    println(s"[prof]   P rows = ${p.count()}")
-    val bands = time("mh sig+bands ck")(ck(bandsFromSigs(sigsFromShingles(raw))))
-    val mhCand = time("mh candidates ck")(ck(candidatesFromBands(bands)))
-    println(s"[prof]   mhCand rows = ${mhCand.count()}")
-    val tMh = p.join(mhCand, Seq("doc_a", "doc_b"), "left_semi")
-    val fp = time("simhash fp ck")(ck(simhashOf(d)))
-    val bandStructs = (0 until 4).map(bd =>
-      s"named_struct('band_idx', $bd, 'band_key', shiftright(simhash, ${bd * graft.functions.GraftKernels.SimBandBits}) & ${graft.functions.GraftKernels.SimBandMask}L)")
-      .mkString(", ")
-    val shBands = fp.selectExpr("doc_id", s"explode(array($bandStructs)) AS band")
-      .selectExpr("doc_id", "band.band_idx AS band_idx", "band.band_key AS band_key")
-    val shKept = time("sh bands+cap ck")(ck(capSimBands(shBands, nC)))
-    val tSh = time("sh membership ck")(ck(p.alias("p")
-      .join(shKept.alias("x"), col("p.doc_a") === col("x.doc_id"))
-      .join(shKept.alias("y"), col("p.doc_b") === col("y.doc_id") &&
-        col("x.band_idx") === col("y.band_idx") &&
-        col("x.band_key") === col("y.band_key"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .distinct()))
-    println(s"[prof]   tSh rows = ${tSh.count()}")
-    val shFound = tSh
-      .join(fp.select(col("doc_id").as("doc_a"), col("simhash").as("fa")), "doc_a")
-      .join(fp.select(col("doc_id").as("doc_b"), col("simhash").as("fb")), "doc_b")
-      .where(expr("bit_count(fa ^ fb) <= 3"))
-      .select(col("doc_a"), col("doc_b"))
-    val fpc = time("winnow capped fps ck")(ck(winnowCappedFps(d)))
-    val tW = time("winnow membership ck")(ck(p.alias("p")
-      .join(fpc.alias("x"), col("p.doc_a") === col("x.doc_id"))
-      .join(fpc.alias("y"), col("p.doc_b") === col("y.doc_id") &&
-        col("x.fh") === col("y.fh"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .distinct()))
-    println(s"[prof]   tW rows = ${tW.count()}")
-    val truth = time("truth union ck")(ck(tMh.union(tSh).union(tW).distinct()))
-    println(s"[prof]   truth rows = ${truth.count()}")
-    def famEval(name: String, found: DataFrame): DataFrame =
-      truth.join(found.select(col("doc_a"), col("doc_b"))
-          .withColumn("_hit", lit(1)), Seq("doc_a", "doc_b"), "left")
-        .agg(count(lit(1)).as("n_true"),
-          sum(coalesce(col("_hit"), lit(0))).as("n_found"))
-        .selectExpr(s"'$name' AS family", "n_true", "n_found",
-          "CASE WHEN n_true = 0 THEN CAST(0.0 AS DOUBLE) " +
-            "ELSE CAST(n_found AS DOUBLE) / n_true END AS recall")
-    time("famEval x3 + out")(
-      famEval("minhash", mhCand).unionByName(famEval("simhash", shFound))
-        .unionByName(famEval("winnow", tW))
-        .orderBy(col("family"))
-        .write.format("noop").mode("overwrite").save())
   }
 }

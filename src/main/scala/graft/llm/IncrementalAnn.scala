@@ -87,7 +87,7 @@ object IncrementalAnn {
     // bootstrap: the first batch trains the initial quantizer on itself
     // (there is nothing else to train on); later batches fold against the
     // stored centroids untouched
-    if (!graft.util.Fs.exists(s, centsPath))
+    if (!graft.util.Fs.exists(centsPath))
       Sinks.writeAtomic(Similarity.kmeansCentroids(se), centsPath)
     val cents = s.read.parquet(centsPath)
     // assign ONLY the batch: O(batch x n_cells) against the stored-centroid broadcast
@@ -250,7 +250,7 @@ object IncrementalAnn {
     val subs = subsOf(scaled(batch.select(col("vec_id"), col("embedding"))))
       .localCheckpoint()
     val cbPath = s"$base/cb"
-    if (!graft.util.Fs.exists(s, cbPath))
+    if (!graft.util.Fs.exists(cbPath))
       Sinks.writeAtomic(Similarity.pqCodebooks(subs), cbPath)
     val cb = s.read.parquet(cbPath)
     val codes = Similarity.pqEncode(subs, cb)

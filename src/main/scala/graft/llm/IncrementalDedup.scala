@@ -75,7 +75,7 @@ object IncrementalDedup {
     // bucket (mergeByKeyBucket heals too, but that runs after this read)
     Sinks.healBuckets(bandStore)
     val stored =
-      if (graft.util.Fs.exists(s, bandStore))
+      if (graft.util.Fs.exists(bandStore))
         s.read.parquet(bandStore).select(col("doc_id"), col("band_idx"), col("band_key"))
       else s.createDataFrame(s.sparkContext.emptyRDD[Row],
         StructType(bandsNew.schema.fields))
@@ -141,7 +141,7 @@ object IncrementalDedup {
     * `_SUCCESS` marker is committed last, so a crash mid-write leaves no
     * marker and the artifact is recomputed). */
   private def committed(s: SparkSession, p: String): Boolean =
-    graft.util.Fs.exists(s, s"$p/_SUCCESS")
+    graft.util.Fs.exists(s"$p/_SUCCESS")
 
   /** Fold one batch of NEW edges into the persisted label store via
     * COMPONENT CONTRACTION: the fixpoint CC runs on the label graph —
@@ -176,7 +176,7 @@ object IncrementalDedup {
     val edges = batch.select(col("doc_a"), col("doc_b")).localCheckpoint()
     Sinks.healBuckets(store)
     val stored =
-      if (graft.util.Fs.exists(s, store))
+      if (graft.util.Fs.exists(store))
         s.read.parquet(store).select(col("doc"), col("label"))
       else edges.select(col("doc_a").as("doc"), col("doc_a").as("label")).limit(0)
     // current labels of the batch endpoints; unseen nodes label themselves
@@ -236,11 +236,10 @@ object IncrementalDedup {
     val nE = Sinks.storedBucketCount(elog).getOrElse {
       Sinks.initBucketStore(elog, 16); 16
     }
-    def bucketOf(c: org.apache.spark.sql.Column) = pmod(c, lit(nE)).cast("int")
     val newLabeled = edges
       .join(newRows.select(col("doc").as("doc_a"), col("label").as("elabel")), "doc_a")
       .select(col("doc_a"), col("doc_b"), col("elabel").as("label"))
-    val srcBuckets = remap.select(bucketOf(col("label")).as("_bucket"))
+    val srcBuckets = remap.select(Sinks.bucketOf(remap, "label", nE).as("_bucket"))
       .distinct().collect().map(_.getInt(0)).toIndexedSeq
     val srcDirs = Sinks.bucketDirs(elog, srcBuckets)
     val movesPath = s"$base/emoves/batch_$batchId"
@@ -265,14 +264,15 @@ object IncrementalDedup {
         .write.mode("overwrite").parquet(movesPath)
     }
     val moved = s.read.parquet(movesPath)
-    val landing = moved.unionByName(newLabeled)
-      .withColumn("_bucket", bucketOf(col("label"))).localCheckpoint()
+    val movedIn = moved.unionByName(newLabeled)
+    val landing = movedIn
+      .withColumn("_bucket", Sinks.bucketOf(movedIn, "label", nE)).localCheckpoint()
     if (srcBuckets.nonEmpty) {
       // rewrite ONLY the move-source buckets: drop moved-out rows, fold in
       // any moved/new rows that land back inside this same bucket set
       val staying =
         srcRows.join(remap.select(col("label")), Seq("label"), "left_anti")
-      val content = staying.withColumn("_bucket", bucketOf(col("label")))
+      val content = staying.withColumn("_bucket", Sinks.bucketOf(staying, "label", nE))
         .unionByName(landing.where(col("_bucket").isin(srcBuckets: _*)))
         .distinct()
       Sinks.rewriteBuckets(s, elog, content, srcBuckets, dropMissing = true)
@@ -333,7 +333,6 @@ object IncrementalDedup {
     val elog = s"$base/edges"
     Sinks.healBuckets(elog)
     val nE = Sinks.storedBucketCount(elog).getOrElse(16)
-    def bucketOf(c: org.apache.spark.sql.Column) = pmod(c, lit(nE)).cast("int")
     val aDirs = forgetEdgeDirs(s, base, affected)
     val logged =
       if (aDirs.isEmpty)
@@ -361,7 +360,7 @@ object IncrementalDedup {
       .select(col("doc").as("doc_a"), col("label").as("nl"))
     val relabeled = surviving.join(newLab, "doc_a")
       .select(col("doc_a"), col("doc_b"), col("nl").as("label"))
-    val targetB = relabeled.select(bucketOf(col("label")).as("_bucket"))
+    val targetB = relabeled.select(Sinks.bucketOf(relabeled, "label", nE).as("_bucket"))
       .distinct().collect().map(_.getInt(0)).toIndexedSeq
     val touchedE = (aDirs.map(_.split("=").last.toInt) ++ targetB).distinct
     if (touchedE.nonEmpty) {
@@ -370,8 +369,8 @@ object IncrementalDedup {
         else s.read.parquet(Sinks.bucketDirs(elog, touchedE): _*)
           .select(col("doc_a"), col("doc_b"), col("label"))
       val keptOther = allRows.join(affected, Seq("label"), "left_anti")
-      val content = keptOther.unionByName(relabeled).distinct()
-        .withColumn("_bucket", bucketOf(col("label")))
+      val kept = keptOther.unionByName(relabeled).distinct()
+      val content = kept.withColumn("_bucket", Sinks.bucketOf(kept, "label", nE))
       Sinks.rewriteBuckets(s, elog, content, touchedE, dropMissing = true)
     }
   }
@@ -384,7 +383,7 @@ object IncrementalDedup {
     val elog = s"$base/edges"
     val nE = Sinks.storedBucketCount(elog).getOrElse(16)
     val abuckets = affected
-      .select(pmod(col("label"), lit(nE)).cast("int").as("_bucket"))
+      .select(Sinks.bucketOf(affected, "label", nE).as("_bucket"))
       .distinct().collect().map(_.getInt(0)).toIndexedSeq
     Sinks.bucketDirs(elog, abuckets)
   }
@@ -404,7 +403,7 @@ object IncrementalDedup {
     * a bare directory. */
   private[graft] def labelsOrEmpty(s: SparkSession, base: String): DataFrame = {
     val p = s"$base/labels"
-    val hasData = graft.util.Fs.hasDataFiles(s, p)
+    val hasData = graft.util.Fs.hasDataFiles(p)
     if (hasData) s.read.parquet(p)
     else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(
@@ -903,12 +902,12 @@ object IncrementalDedup {
       (0 to 1).foreach { t =>
         val tmp = s"$base/src_stage_$t"
         newDocs.where(expr(s"(doc_id DIV 3) % 2 = $t")).coalesce(1).write.parquet(tmp)
-        val part = graft.util.Fs.listFiles(s, tmp, ".parquet").head
-        graft.util.Fs.mkdirs(s, s"$base/src")
+        val part = graft.util.Fs.listFiles(tmp, ".parquet").head
+        graft.util.Fs.mkdirs(s"$base/src")
         val dest = s"$base/src/t$t.parquet"
-        graft.util.Fs.move(s, part, dest)
+        graft.util.Fs.move(part, dest)
         Sinks.deleteRec(tmp)
-        graft.util.Fs.setMtime(s, dest, 1700000000000L + t * 60000L)
+        graft.util.Fs.setMtime(dest, 1700000000000L + t * 60000L)
       }
       val agreeExpr = (0 until XHash.K).map(k => s"IF(m$k = o$k, 1, 0)").mkString(" + ")
       val stream = s.readStream

@@ -60,7 +60,7 @@ object Cbo {
       // session warehouse dir, not the process CWD (file-path reads
       // resolve against CWD, so every OTHER entry accepts a relative sf
       // dir — caught by the r12 full-sf1 gate on `target/gen/sf1`)
-      val loc = new java.io.File(s"$dir/$tname.parquet").getAbsolutePath
+      val loc = graft.util.Fs.qualify(s"$dir/$tname.parquet")
       s.sql(s"CREATE TABLE $tbl USING parquet LOCATION '$loc'")
       statCols.get(tname) match {
         case Some(cols) if cols.nonEmpty =>

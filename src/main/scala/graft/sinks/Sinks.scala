@@ -1,17 +1,16 @@
 package graft.sinks
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
+import java.io.FileNotFoundException
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 import graft.ingest.CommitEtl
 import graft.sources.Tables
 import graft.util.Exact._
+import graft.util.Fs
 
 /** Durable sink surface: crash-safe atomic overwrite, partitioned tables
   * with pruned reads (reference O7, the KV prefix scan `git_etl.ts:142`),
@@ -34,21 +33,34 @@ import graft.util.Exact._
   * only because every sink in this file layers its OWN staged-publish
   * atomicity on top (writeAtomic's two-rename swap, per-bucket staged
   * swaps in [[mergeByKeyBucket]]/[[rewriteBuckets]], versioned staged-dir
-  * renames in [[commitVersion]], the [[publishSet]] manifest). A new sink
-  * MUST do the same: write to an invisible staging path (dot/underscore
-  * prefix or a sidecar dir) and publish with an atomic rename — never
-  * point readers at a directory a Spark job is writing into. */
+  * renames in [[commitVersion]], the versioned manifest of
+  * [[commitManifest]]). A new sink MUST do the same: write to an
+  * invisible staging path (dot/underscore prefix or a sidecar dir) and
+  * publish with a non-overwriting rename ([[graft.util.Fs.move]]) —
+  * never point readers at a directory a Spark job is writing into. Every
+  * file mutation (rename, delete, mkdirs, metadata write) goes through
+  * [[graft.util.Fs]], the one place they happen; its rename contract
+  * (`move` never overwrites and is the only commit-point rename,
+  * `replace` overwrites a file a replay re-derives) is what the swaps
+  * below are built from. */
 object Sinks {
 
   /** All sink queries write beneath the build dir — never outside the repo. */
   val tmpBase = "/root/repo/target/qtmp"
 
-  def deleteRec(p: String): Unit = {
-    val path = Paths.get(p)
-    if (Files.exists(path)) {
-      Files.walk(path).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
+  def deleteRec(p: String): Unit = Fs.delete(p)
+
+  /** THE bucket law of every bucket store: integral keys bucket by
+    * `pmod(key, n)` (the layout SPJ co-bucketing and the oracles rely
+    * on), any other key type by `pmod(xxhash64(key), n)`. Int-typed so it
+    * round-trips partition discovery with a stable type. Takes the frame
+    * the key column belongs to because the law depends on its type. */
+  def bucketOf(df: DataFrame, c: String, n: Int): Column = {
+    val k = df.schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => col(c)
+      case _ => xxhash64(col(c))
     }
+    pmod(k, lit(n)).cast("int")
   }
 
   /** O11: truncate/reset a table directory (the reference clears its KV
@@ -65,28 +77,57 @@ object Sinks {
     * Called on every writeAtomic (startup-equivalent) and safe to call any
     * time — a no-op unless exactly that crash window is on disk. */
   def recover(dest: String): Unit = {
-    val destPath = Paths.get(dest)
-    val old = Paths.get(dest + ".old")
-    if (!Files.exists(destPath) && Files.exists(old))
-      Files.move(old, destPath, StandardCopyOption.ATOMIC_MOVE)
+    val old = dest + ".old"
+    if (!Fs.exists(dest) && Fs.exists(old)) Fs.move(old, dest)
   }
 
+  /** THE commit point of every manifest-gated store ([[publishSet]] and
+    * `KvBatchWrite.commit`): the manifest text is written whole to
+    * `dir/MANIFEST.tmp`, then MOVED onto the fresh name `dir/MANIFEST.<v>`
+    * — one non-overwriting rename, so the store never passes through a
+    * state without a complete manifest (an overwriting rename is
+    * delete-then-rename on Hadoop's local file system). Readers take the
+    * highest version ([[readManifest]]). A crash before the move leaves a
+    * stray `MANIFEST.tmp` that the next commit overwrites; one after it
+    * leaves superseded versions that the next commit deletes. A second
+    * writer racing for the same version fails its move instead of
+    * silently replacing the first. */
+  def commitManifest(dir: String, v: Long, text: String): Unit = {
+    Fs.writeString(s"$dir/MANIFEST.tmp", text)
+    Fs.move(s"$dir/MANIFEST.tmp", s"$dir/MANIFEST.$v")
+    manifestVersions(dir).filter(_ < v).foreach(o => Fs.delete(s"$dir/MANIFEST.$o"))
+  }
+
+  private val ManifestName = """MANIFEST\.(-?\d+)""".r
+
+  private def manifestVersions(dir: String): Seq[Long] =
+    Fs.names(dir).collect { case ManifestName(v) => v.toLong }
+
+  /** The newest committed manifest of `dir` as (version, text); None when
+    * the store never committed. */
+  def readManifest(dir: String): Option[(Long, String)] =
+    manifestVersions(dir).maxOption.flatMap { v =>
+      try Some(v -> Fs.readString(s"$dir/MANIFEST.$v"))
+      catch { // superseded and deleted between the listing and the read
+        case _: FileNotFoundException => readManifest(dir)
+      }
+    }
+
   /** Publish a SET of tables as one atomic unit: every table's data lands
-    * under `base/tables/<name>/v_<version>` first, then the one-line
-    * MANIFEST pointer swaps via temp-write + atomic rename. A crash
-    * anywhere before the swap leaves readers on the previous complete
-    * set; after it, on the new complete set — never a cross-version mix
-    * (the guarantee per-table [[writeAtomic]] cannot give across tables).
+    * under `base/tables/<name>/v_<version>` first, then the manifest
+    * commits ([[commitManifest]]). A crash anywhere before that leaves
+    * readers on the previous complete set; after it, on the new complete
+    * set — never a cross-version mix (the guarantee per-table
+    * [[writeAtomic]] cannot give across tables).
     *
     * Replay-safe: a crash-recovery re-run of an already-committed version
     * is a no-op — readers are LIVE on those `v_<version>` dirs, so
     * rewriting them in place would break the never-partial guarantee. An
-    * uncommitted version's dirs (crash before the manifest swap) are
+    * uncommitted version's dirs (crash before the manifest commit) are
     * invisible to readers and are staged + atomically renamed per table. */
   def publishSet(s: SparkSession, base: String, version: Long,
                  tables: Map[String, DataFrame]): Unit = {
-    val committed =
-      try manifestVersion(base) catch { case _: Exception => Long.MinValue }
+    val committed = readManifest(base).fold(Long.MinValue)(_._1)
     // <= not ==: a delayed replay of an OLDER committed publish must not
     // roll readers back to stale data (versions are monotone by contract)
     if (version <= committed) return // replay of a committed publish
@@ -96,18 +137,14 @@ object Sinks {
       deleteRec(staging)
       df.write.mode("overwrite").parquet(staging)
       deleteRec(dest) // uncommitted leftovers only — version != committed
-      Files.move(Paths.get(staging), Paths.get(dest), StandardCopyOption.ATOMIC_MOVE)
+      Fs.move(staging, dest)
     }
-    Files.createDirectories(Paths.get(base))
-    val tmp = Paths.get(s"$base/MANIFEST.tmp")
-    Files.writeString(tmp, version.toString)
-    Files.move(tmp, Paths.get(s"$base/MANIFEST"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    commitManifest(base, version, version.toString)
   }
 
   /** Current committed version of a [[publishSet]] store. */
-  def manifestVersion(base: String): Long =
-    Files.readString(Paths.get(s"$base/MANIFEST")).trim.toLong
+  def manifestVersion(base: String): Long = readManifest(base).map(_._1)
+    .getOrElse(throw new FileNotFoundException(s"no committed manifest under $base"))
 
   /** Read one table of the committed set — always the manifest's version. */
   def readSet(s: SparkSession, base: String, name: String): DataFrame =
@@ -119,17 +156,14 @@ object Sinks {
     * crash between the two renames is healed by [[recover]] on the next
     * write (or by any caller invoking it at startup). */
   def writeAtomic(df: DataFrame, dest: String, partitionCols: Seq[String] = Nil): Unit = {
-    val destPath = Paths.get(dest)
-    Files.createDirectories(destPath.getParent)
     recover(dest) // heal a leftover .old BEFORE deleting sidecars
     val tmp = dest + ".inprogress"
     val old = dest + ".old"
     deleteRec(tmp); deleteRec(old)
     val w = df.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(tmp)
-    if (Files.exists(destPath))
-      Files.move(destPath, Paths.get(old), StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), destPath, StandardCopyOption.ATOMIC_MOVE)
+    if (Fs.exists(dest)) Fs.move(dest, old)
+    Fs.move(tmp, dest)
     deleteRec(old)
   }
 
@@ -168,26 +202,21 @@ object Sinks {
     // given key (otherwise an update could land beside a stale twin it
     // never reads).
     val bCol = Option(bucketCol).getOrElse(key)
-    if (!Files.exists(Paths.get(dest))) {
+    if (!Fs.exists(dest)) {
       // first write: stage + single rename, so readers never see a
       // half-written initial store. The chosen bucket count is persisted
       // as `_graft_buckets` INSIDE the staged dir (underscore-prefixed —
       // invisible to Spark readers), so it is atomic with the data and
       // every later merge buckets against the store's true layout.
-      // int-typed so it round-trips partition discovery with a stable type
-      val bucketed = batch.withColumn("_bucket",
-        pmod(col(bCol), lit(nBuckets)).cast("int"))
-      Files.createDirectories(Paths.get(dest).getParent)
+      val bucketed = batch.withColumn("_bucket", bucketOf(batch, bCol, nBuckets))
       val init = dest + ".init"
       deleteRec(init)
       bucketed.write.partitionBy("_bucket").parquet(init)
-      Files.write(Paths.get(init, "_graft_buckets"),
-        nBuckets.toString.getBytes("UTF-8"))
+      Fs.writeString(s"$init/_graft_buckets", nBuckets.toString)
       // persist the bucketing column too: a later delete/merge must bucket
       // by the store's TRUE layout column, not assume the merge key
-      Files.write(Paths.get(init, "_graft_bucket_col"),
-        bCol.getBytes("UTF-8"))
-      Files.move(Paths.get(init), Paths.get(dest), StandardCopyOption.ATOMIC_MOVE)
+      Fs.writeString(s"$init/_graft_bucket_col", bCol)
+      Fs.move(init, dest)
     } else {
       healBuckets(dest)
       // merge against the STORE's bucket count, not the caller's: a
@@ -202,8 +231,7 @@ object Sinks {
       // layout, or the upsert reads the wrong buckets and leaves stale
       // twins alive (exactly the mismatched-nBuckets failure mode)
       val storeBCol = storedBucketCol(dest).getOrElse(bCol)
-      val bucketed = batch.withColumn("_bucket",
-        pmod(col(storeBCol), lit(n)).cast("int"))
+      val bucketed = batch.withColumn("_bucket", bucketOf(batch, storeBCol, n))
       // touched-bucket list is partition METADATA (<= nBuckets values)
       val touched = bucketed.select(col("_bucket")).distinct()
         .collect().map(_.getInt(0)).toIndexedSeq
@@ -225,7 +253,7 @@ object Sinks {
     * partition discovery needs no placeholder). */
   def deleteByKeyBucket(s: SparkSession, dest: String, keys: DataFrame,
                         key: String): Unit = {
-    if (!Files.exists(Paths.get(dest))) return
+    if (!Fs.exists(dest)) return
     healBuckets(dest)
     val n = storedBucketCount(dest).getOrElse(16)
     // Bucket by the store's TRUE layout column (persisted at init), not by
@@ -238,7 +266,7 @@ object Sinks {
       else if (canPrune) Seq(col(bCol)) else Nil)): _*).distinct()
     val touched =
       if (canPrune)
-        del.select(pmod(col(bCol), lit(n)).cast("int").as("_bucket"))
+        del.select(bucketOf(del, bCol, n).as("_bucket"))
           .distinct().collect().map(_.getInt(0)).toIndexedSeq
       else
         // delete list lacks the bucketing column: correct-but-unpruned
@@ -282,38 +310,29 @@ object Sinks {
     * exactly this ordering). */
   def deleteByKeyMoR(s: SparkSession, dest: String, keys: DataFrame,
                      key: String, tag: String): Unit = {
-    if (!Files.exists(Paths.get(dest))) return
+    if (!Fs.exists(dest)) return
     val n = storedBucketCount(dest).getOrElse(16)
     val bCol = storedBucketCol(dest).getOrElse(key)
     val withBucket =
-      if (bCol == key)
-        keys.select(col(key)).distinct()
-          .withColumn("_del_bucket", pmod(col(key), lit(n)).cast("int"))
-      else if (keys.columns.contains(bCol))
-        keys.select(col(key), col(bCol)).distinct()
-          .select(col(key), pmod(col(bCol), lit(n)).cast("int").as("_del_bucket"))
-      else
+      if (bCol == key) {
+        val ks = keys.select(col(key)).distinct()
+        ks.withColumn("_del_bucket", bucketOf(ks, key, n))
+      } else if (keys.columns.contains(bCol)) {
+        val ks = keys.select(col(key), col(bCol)).distinct()
+        ks.select(col(key), bucketOf(ks, bCol, n).as("_del_bucket"))
+      } else
         keys.select(col(key)).distinct()
           .withColumn("_del_bucket", lit(null).cast("int"))
-    val delDir = Paths.get(dest, "_deletes")
-    Files.createDirectories(delDir)
+    val delDir = s"$dest/_deletes"
     // stage then move under deterministic per-tag names (dot-prefixed
     // staging dir: invisible to the sidecar reader if a crash strands it)
-    val staging = s"$dest/_deletes/.staging_$tag"
+    val staging = s"$delDir/.staging_$tag"
     deleteRec(staging)
     withBucket.write.mode("overwrite").parquet(staging)
-    val listing = Files.list(delDir)
-    try listing.iterator().asScala.toList
-      .filter(_.getFileName.toString.startsWith(s"del_${tag}_"))
-      .foreach(Files.deleteIfExists(_))
-    finally listing.close()
-    val stFiles = Files.list(Paths.get(staging))
-    val parts = try stFiles.iterator().asScala.toList
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-    finally stFiles.close()
-    parts.zipWithIndex.foreach { case (p, i) =>
-      Files.move(p, delDir.resolve(s"del_${tag}_$i.parquet"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Fs.names(delDir).filter(_.startsWith(s"del_${tag}_"))
+      .foreach(f => Fs.delete(s"$delDir/$f"))
+    Fs.listFiles(staging, ".parquet").zipWithIndex.foreach { case (p, i) =>
+      Fs.replace(p, s"$delDir/del_${tag}_$i.parquet")
     }
     deleteRec(staging)
   }
@@ -322,13 +341,9 @@ object Sinks {
     * sidecar is absent/empty. Bounded by the delete traffic since the
     * last compaction, not by store size. */
   def pendingDeleteKeys(s: SparkSession, dest: String): Option[DataFrame] = {
-    val delDir = Paths.get(dest, "_deletes")
-    if (!Files.exists(delDir)) return None
-    val listing = Files.list(delDir)
-    val any = try listing.iterator().asScala
-      .exists(_.getFileName.toString.endsWith(".parquet"))
-    finally listing.close()
-    if (any) Some(s.read.parquet(delDir.toString)) else None
+    val delDir = s"$dest/_deletes"
+    if (Fs.names(delDir).exists(_.endsWith(".parquet"))) Some(s.read.parquet(delDir))
+    else None
   }
 
   /** Read a bucketed store with pending MoR deletes applied: base scan
@@ -387,17 +402,16 @@ object Sinks {
     deleteRec(staging)
     df.write.mode("overwrite").partitionBy("_bucket").parquet(staging)
     touched.foreach { b =>
-      val live = Paths.get(s"$dest/_bucket=$b")
-      val old = Paths.get(s"$dest/.old_bucket_$b")
-      val staged = Paths.get(s"$staging/_bucket=$b")
-      if (Files.exists(staged)) {
-        deleteRec(old.toString)
-        if (Files.exists(live))
-          Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
-        Files.move(staged, live, StandardCopyOption.ATOMIC_MOVE)
-        deleteRec(old.toString)
-      } else if (dropMissing && Files.exists(live)) {
-        deleteRec(live.toString)
+      val live = s"$dest/_bucket=$b"
+      val old = s"$dest/.old_bucket_$b"
+      val staged = s"$staging/_bucket=$b"
+      if (Fs.exists(staged)) {
+        deleteRec(old)
+        if (Fs.exists(live)) Fs.move(live, old)
+        Fs.move(staged, live)
+        deleteRec(old)
+      } else if (dropMissing) {
+        deleteRec(live)
       }
     }
     deleteRec(staging)
@@ -409,14 +423,8 @@ object Sinks {
     * MULTISET bucket stores — rows bucketed by some derived column with
     * no unique merge key — which [[mergeByKeyBucket]]'s keyed init path
     * can't host (its upsert would collapse same-key rows). */
-  def initBucketStore(dest: String, nBuckets: Int): Unit = {
-    val d = Paths.get(dest)
-    if (!Files.exists(d)) {
-      Files.createDirectories(d)
-      Files.write(Paths.get(dest, "_graft_buckets"),
-        nBuckets.toString.getBytes("UTF-8"))
-    }
-  }
+  def initBucketStore(dest: String, nBuckets: Int): Unit =
+    if (!Fs.exists(dest)) Fs.writeString(s"$dest/_graft_buckets", nBuckets.toString)
 
   /** Replace the `touched` buckets of a bucketed store with `df`'s rows
     * (`df` carries an int `_bucket` column and holds rows ONLY for
@@ -432,41 +440,28 @@ object Sinks {
     * a parquet read, this is file-level pruning: no other bucket's files
     * are ever listed, let alone read. */
   def bucketDirs(dest: String, buckets: Seq[Int]): Seq[String] =
-    buckets.map(b => s"$dest/_bucket=$b")
-      .filter(p => Files.exists(Paths.get(p)))
+    Fs.existing(buckets.map(b => s"$dest/_bucket=$b"))
 
   /** The store's bucket count from its `_graft_buckets` metadata file;
     * None for stores predating the metadata (callers then supply it). */
-  def storedBucketCount(dest: String): Option[Int] = {
-    val meta = Paths.get(dest, "_graft_buckets")
-    if (Files.exists(meta))
-      Some(new String(Files.readAllBytes(meta), "UTF-8").trim.toInt)
-    else None
-  }
+  def storedBucketCount(dest: String): Option[Int] =
+    storedMeta(dest, "_graft_buckets").map(_.toInt)
 
   /** The store's bucketing COLUMN from its `_graft_bucket_col` metadata;
     * None for stores predating it (which always bucketed by the key). */
-  def storedBucketCol(dest: String): Option[String] = {
-    val meta = Paths.get(dest, "_graft_bucket_col")
-    if (Files.exists(meta))
-      Some(new String(Files.readAllBytes(meta), "UTF-8").trim)
-    else None
+  def storedBucketCol(dest: String): Option[String] =
+    storedMeta(dest, "_graft_bucket_col")
+
+  private def storedMeta(dest: String, name: String): Option[String] = {
+    val meta = s"$dest/$name"
+    if (Fs.exists(meta)) Some(Fs.readString(meta).trim) else None
   }
 
   /** The bucket ids that physically exist in the store right now —
     * parsed from the `_bucket=N` partition dirs. */
-  def existingBuckets(dest: String): Seq[Int] = {
-    val d = Paths.get(dest)
-    if (!Files.exists(d)) Nil
-    else {
-      val st = Files.list(d)
-      try st.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.startsWith("_bucket="))
-        .map(_.stripPrefix("_bucket=").toInt).toIndexedSeq
-      finally st.close()
-    }
-  }
+  def existingBuckets(dest: String): Seq[Int] =
+    Fs.names(dest).filter(_.startsWith("_bucket="))
+      .map(_.stripPrefix("_bucket=").toInt).toIndexedSeq
 
   /** Bucket count sized from expected store rows: one bucket per
     * `targetRowsPerBucket` (default 4M — a ~100-500 MB bucket rewrite at
@@ -496,34 +491,18 @@ object Sinks {
     deleteRec(staging)
     df.repartition(col("_bucket")).write.mode("overwrite")
       .partitionBy("_bucket").parquet(staging)
-    val stagingPath = Paths.get(staging)
-    if (Files.exists(stagingPath)) {
-      val listing = Files.list(stagingPath)
-      val staged = try listing.iterator().asScala.toList
-        .filter(_.getFileName.toString.startsWith("_bucket="))
-      finally listing.close()
-      staged.foreach { bd =>
-        val b = bd.getFileName.toString.stripPrefix("_bucket=")
-        val live = Paths.get(s"$dest/_bucket=$b")
-        Files.createDirectories(live)
-        val files = Files.list(bd)
-        val parts = try files.iterator().asScala.toList
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-        finally files.close()
-        // Replay idempotence must not depend on the replay staging the
-        // SAME file count as the first attempt: clear every file this tag
-        // previously moved into the bucket before laying down the new
-        // set, so a replay that stages fewer files cannot leave a stale
-        // higher-index file (= duplicated rows) behind.
-        val prior = Files.list(live)
-        try prior.iterator().asScala.toList
-          .filter(_.getFileName.toString.startsWith(s"append_${tag}_"))
-          .foreach(Files.deleteIfExists(_))
-        finally prior.close()
-        parts.zipWithIndex.foreach { case (p, i) =>
-          Files.move(p, live.resolve(s"append_${tag}_$i.parquet"),
-            StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-        }
+    Fs.names(staging).filter(_.startsWith("_bucket=")).foreach { bd =>
+      val live = s"$dest/$bd"
+      Fs.mkdirs(live)
+      // Replay idempotence must not depend on the replay staging the
+      // SAME file count as the first attempt: clear every file this tag
+      // previously moved into the bucket before laying down the new
+      // set, so a replay that stages fewer files cannot leave a stale
+      // higher-index file (= duplicated rows) behind.
+      Fs.names(live).filter(_.startsWith(s"append_${tag}_"))
+        .foreach(f => Fs.delete(s"$live/$f"))
+      Fs.listFiles(s"$staging/$bd", ".parquet").zipWithIndex.foreach { case (p, i) =>
+        Fs.replace(p, s"$live/append_${tag}_$i.parquet")
       }
     }
     deleteRec(staging)
@@ -541,20 +520,8 @@ object Sinks {
   def compactBuckets(s: SparkSession, dest: String,
                      maxFilesPerBucket: Int = 1): Unit = {
     healBuckets(dest)
-    val d = Paths.get(dest)
-    if (!Files.exists(d)) return
-    def parquetCount(b: Path): Int = {
-      val listing = Files.list(b)
-      try listing.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
-      finally listing.close()
-    }
-    val listing = Files.list(d)
-    val oversized =
-      try listing.iterator().asScala.toList
-        .filter(_.getFileName.toString.startsWith("_bucket="))
-        .filter(parquetCount(_) > maxFilesPerBucket)
-        .map(_.getFileName.toString.stripPrefix("_bucket=").toInt)
-      finally listing.close()
+    val oversized = existingBuckets(dest)
+      .filter(b => Fs.listFiles(s"$dest/_bucket=$b", ".parquet").size > maxFilesPerBucket)
     if (oversized.nonEmpty) {
       val df = s.read.parquet(dest)
         .where(col("_bucket").isin(oversized: _*))
@@ -578,18 +545,9 @@ object Sinks {
   // stays bounded (the retention horizon moves up to N).
   // ---------------------------------------------------------------------
 
-  private def versionsOf(store: String, prefix: String): Seq[Long] = {
-    val d = Paths.get(store)
-    if (!Files.exists(d)) Nil
-    else {
-      val listing = Files.list(d)
-      try listing.iterator().asScala.toList
-        .map(_.getFileName.toString)
-        .filter(_.startsWith(prefix + "="))
-        .map(_.stripPrefix(prefix + "=").toLong)
-      finally listing.close()
-    }
-  }
+  private def versionsOf(store: String, prefix: String): Seq[Long] =
+    Fs.names(store).filter(_.startsWith(prefix + "="))
+      .map(_.stripPrefix(prefix + "=").toLong)
 
   /** Highest committed version, or None for an empty store. */
   def latestVersion(store: String): Option[Long] =
@@ -603,14 +561,12 @@ object Sinks {
     * half-visible version. Returns the committed version number. */
   def commitVersion(s: SparkSession, store: String, batch: DataFrame,
                     key: String): Long = {
-    Files.createDirectories(Paths.get(store))
     val v = latestVersion(store).map(_ + 1).getOrElse(0L)
     val stage = s"$store/.staging_delta_$v"
     deleteRec(stage)
     batch.dropDuplicates(key).withColumn("_tombstone", lit(false))
       .withColumn("_v", lit(v)).write.parquet(stage)
-    Files.move(Paths.get(stage), Paths.get(s"$store/delta_v=$v"),
-      StandardCopyOption.ATOMIC_MOVE)
+    Fs.move(stage, s"$store/delta_v=$v")
     v
   }
 
@@ -623,15 +579,13 @@ object Sinks {
     * row. Same staged-rename commit point as [[commitVersion]]. */
   def commitDeletes(s: SparkSession, store: String, keys: DataFrame,
                     key: String): Long = {
-    Files.createDirectories(Paths.get(store))
     val v = latestVersion(store).map(_ + 1).getOrElse(0L)
     val stage = s"$store/.staging_delta_$v"
     deleteRec(stage)
     keys.select(col(key)).dropDuplicates(key)
       .withColumn("_tombstone", lit(true)).withColumn("_v", lit(v))
       .write.parquet(stage)
-    Files.move(Paths.get(stage), Paths.get(s"$store/delta_v=$v"),
-      StandardCopyOption.ATOMIC_MOVE)
+    Fs.move(stage, s"$store/delta_v=$v")
     v
   }
 
@@ -774,9 +728,9 @@ object Sinks {
     val stage = s"$store/.staging_base_$upTo"
     deleteRec(stage)
     snap.write.parquet(stage)
-    val dest = Paths.get(s"$store/base_v=$upTo")
-    deleteRec(dest.toString)
-    Files.move(Paths.get(stage), dest, StandardCopyOption.ATOMIC_MOVE)
+    val dest = s"$store/base_v=$upTo"
+    deleteRec(dest)
+    Fs.move(stage, dest)
     versionsOf(store, "delta_v").filter(_ <= upTo)
       .foreach(d => deleteRec(s"$store/delta_v=$d"))
     versionsOf(store, "base_v").filter(_ < upTo)
@@ -786,23 +740,12 @@ object Sinks {
   /** Restore any bucket whose live dir vanished between mergeByKeyBucket's
     * two renames (crash window); discard `.old_bucket_*` leftovers whose
     * swap completed. Safe to call any time; a no-op on a healthy store. */
-  def healBuckets(dest: String): Unit = {
-    val d = Paths.get(dest)
-    if (Files.exists(d)) {
-      val listing = Files.list(d)
-      try {
-        listing.iterator().asScala.toList
-          .filter(_.getFileName.toString.startsWith(".old_bucket_"))
-          .foreach { old =>
-            val b = old.getFileName.toString.stripPrefix(".old_bucket_")
-            val live = d.resolve(s"_bucket=$b")
-            if (!Files.exists(live))
-              Files.move(old, live, StandardCopyOption.ATOMIC_MOVE)
-            else deleteRec(old.toString)
-          }
-      } finally listing.close()
+  def healBuckets(dest: String): Unit =
+    Fs.names(dest).filter(_.startsWith(".old_bucket_")).foreach { o =>
+      val old = s"$dest/$o"
+      val live = s"$dest/_bucket=${o.stripPrefix(".old_bucket_")}"
+      if (!Fs.exists(live)) Fs.move(old, live) else deleteRec(old)
     }
-  }
 
   /** SCD2 transition over the customer dimension (see q_sink_scd2):
     * base versions effective from `init`, hash-derived change batch
@@ -983,7 +926,7 @@ object Sinks {
     // consistency writeAtomic can't give (two independent table swaps
     // have a window where readers see new A with old B; a report joining
     // them silently mixes versions). Publish writes every table's
-    // v_<N> directory FIRST and swaps the one-line MANIFEST last, so
+    // v_<N> directory FIRST and commits the next MANIFEST.<N> last, so
     // readers resolve the pointer and see either the complete old set or
     // the complete new set — never a mix. The entry publishes v1 and v2,
     // then simulates a CRASHED v3 (one table's data written, manifest
@@ -1004,7 +947,7 @@ object Sinks {
       publishSet(s, base, 2L, Map(
         "by_status" -> stats(or, "o_orderstatus"),
         "by_prio" -> stats(or, "o_orderpriority")))
-      // crashed v3: one table written, manifest never swapped
+      // crashed v3: one table written, manifest never committed
       stats(or.where(col("o_totalprice") > 200000), "o_orderstatus")
         .write.mode("overwrite").parquet(s"$base/tables/by_status/v_3")
       val v = manifestVersion(base)
@@ -1044,7 +987,7 @@ object Sinks {
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val existing =
-            if (Files.exists(Paths.get(dest))) s.read.parquet(dest)
+            if (Fs.exists(dest)) s.read.parquet(dest)
             else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
           writeAtomic(CommitEtl.upsert(existing, batch, "event_id", Seq("ts", "value")), dest)
         }
@@ -1342,7 +1285,7 @@ object Sinks {
         .withColumn("c_mktsegment", lit("CHANGED"))
       val n = storedBucketCount(store).getOrElse(16)
       val touched = dimChange
-        .select(pmod(col("c_custkey"), lit(n)).cast("int").as("_b"))
+        .select(bucketOf(dimChange, "c_custkey", n).as("_b"))
         .distinct().collect().map(_.getInt(0)).toIndexedSeq
       val affected = s.read.parquet(bucketDirs(store, touched): _*)
       val backfill = affected
@@ -1392,7 +1335,7 @@ object Sinks {
       // at first batch, AQE-exempt, fixed per-partition per-tick cost —
       // this entry was the r15 bench's worst anti-scaler at 0.37)
       graft.util.Streams.withShufflePartitions(s,
-          graft.util.Streams.statePartitionsFor(graft.util.Fs.sizeBytes(s, src))) {
+          graft.util.Streams.statePartitionsFor(Fs.sizeBytes(src))) {
         val q = agg.writeStream.outputMode("update")
           .option("checkpointLocation", ckpt)
           .foreachBatch { (b: DataFrame, _: Long) =>

@@ -23,6 +23,9 @@ import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning,
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
+
+import graft.util.Fs
 
 /** DataSource V2 reader over a graft bucket store (`Sinks.mergeByKeyBucket`
   * layout: parquet part files under `<path>/_bucket=<i>/` +
@@ -74,36 +77,39 @@ object BucketStoreSource {
     props.getOrElse("path",
       throw new IllegalArgumentException("BucketStoreSource requires option 'path'"))
 
-  /** (bucketId, data files) per bucket directory, bucket-id ascending.
-    * Underscore/dot-prefixed files (parquet `_SUCCESS`, the MoR delete
-    * sidecar lives at store level and never matches `_bucket=`) are
-    * skipped the same way Spark's own file index hides them. */
-  private[sources] def bucketDirs(path: String): Seq[(Int, Seq[String])] = {
-    val root = new java.io.File(path)
-    require(root.isDirectory, s"no bucket store at $path")
-    val dirs = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("_bucket="))
+  /** One partition per non-empty bucket directory, bucket-id ascending;
+    * file sizes come from the same listing. Underscore/dot-prefixed files
+    * (parquet `_SUCCESS`, checksums; the MoR delete sidecar lives at store
+    * level and never matches `_bucket=`) are skipped the same way Spark's
+    * own file index hides them. */
+  private[sources] def bucketDirs(path: String): Seq[BucketStorePartition] = {
+    require(Fs.isDirectory(path), s"no bucket store at $path")
+    Fs.list(path)
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("_bucket="))
       .flatMap { d =>
-        val files = Option(d.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith("_") && !f.getName.startsWith("."))
-          .map(_.getAbsolutePath).sorted.toSeq
+        val files = Fs.list(d.getPath.toString)
+          .filter { f =>
+            val n = f.getPath.getName
+            f.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+          }
+          .sortBy(_.getPath.toString)
         // an emptied bucket dir contributes no partition (deleteByKeyBucket
         // drops emptied buckets entirely, so this is the crash-window case)
         if (files.isEmpty) None
-        else Some(d.getName.stripPrefix("_bucket=").toInt -> files)
+        else Some(BucketStorePartition(d.getPath.getName.stripPrefix("_bucket=").toInt,
+          files.map(_.getPath.toString), files.map(_.getLen).sum))
       }
-    dirs.sortBy(_._1).toSeq
+      .sortBy(_.bucket)
   }
 
   private def firstDataFile(path: String): String =
-    bucketDirs(path).headOption.flatMap(_._2.headOption)
+    bucketDirs(path).headOption.flatMap(_.files.headOption)
       .getOrElse(throw new IllegalArgumentException(s"empty bucket store at $path"))
 
   /** Footer MessageType of one data file (all files share the writer's
     * schema) — driver-side, one footer read. */
   private[sources] def footerSchema(path: String): MessageType = {
-    val in = HadoopInputFile.fromPath(new Path(firstDataFile(path)), new Configuration())
+    val in = HadoopInputFile.fromPath(new Path(firstDataFile(path)), Fs.conf)
     val r = ParquetFileReader.open(in)
     try r.getFooter.getFileMetaData.getSchema finally r.close()
   }
@@ -174,8 +180,9 @@ class BucketStoreScanBuilder(path: String) extends ScanBuilder
 
 /** One partition per bucket directory; the bucket id IS the partition
   * key, which is what lets Spark align partition i with partition i of
-  * another store instead of shuffling both. */
-case class BucketStorePartition(bucket: Int, files: Seq[String])
+  * another store instead of shuffling both. `bytes` is the files' total
+  * size, for statistics. */
+case class BucketStorePartition(bucket: Int, files: Seq[String], bytes: Long)
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](bucket))
@@ -185,8 +192,7 @@ class BucketStoreScan(path: String, required: StructType)
     extends Scan with Batch with SupportsReportPartitioning
     with SupportsReportStatistics {
 
-  private lazy val parts: Seq[BucketStorePartition] =
-    BucketStoreSource.bucketDirs(path).map { case (b, fs) => BucketStorePartition(b, fs) }
+  private lazy val parts: Seq[BucketStorePartition] = BucketStoreSource.bucketDirs(path)
 
   // requested data columns (everything but the injected partition column),
   // projected from the file's own footer definitions
@@ -209,8 +215,7 @@ class BucketStoreScan(path: String, required: StructType)
       Array(Expressions.identity("_bucket")), parts.length)
 
   override def estimateStatistics(): Statistics = new Statistics {
-    private lazy val bytes = parts.flatMap(_.files)
-      .map(f => new java.io.File(f).length()).sum
+    private lazy val bytes = parts.map(_.bytes).sum
     override def sizeInBytes(): util.OptionalLong =
       util.OptionalLong.of(math.max(1L, bytes))
     override def numRows(): util.OptionalLong = util.OptionalLong.empty()
@@ -221,10 +226,12 @@ class BucketStoreScan(path: String, required: StructType)
   override def createReaderFactory(): PartitionReaderFactory = {
     val fields = required.fields.map(f => (f.name, f.dataType))
     val projStr = projection.toString
+    // executors have no session: ship the driver's Hadoop conf
+    val shipped = new SerializableConfiguration(Fs.conf)
     (partition: InputPartition) => {
       val p = partition.asInstanceOf[BucketStorePartition]
       new PartitionReader[InternalRow] {
-        private val conf = new Configuration()
+        private val conf = new Configuration(shipped.value)
         conf.set(ReadSupport.PARQUET_READ_SCHEMA, projStr)
         private var fileIdx = -1
         private var reader: ParquetReader[Group] = _

@@ -1,6 +1,7 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.io.{BufferedWriter, OutputStreamWriter}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 
 import scala.jdk.CollectionConverters._
@@ -11,6 +12,10 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
+
+import graft.sinks.Sinks
+import graft.util.Fs
 
 /** DataSource V2 WRITE path — the sink half of the reference's ETL
   * (persist the pulled batch to the store, `git_etl.ts:127-132`),
@@ -25,10 +30,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    deletes its own file;
   *  - the DRIVER publishes in [[KvBatchWrite.commit]]: exactly the files
   *    named by the arriving messages move into the live dir, then a
-  *    MANIFEST listing them swaps in via temp-write + atomic rename.
-  *    Readers resolve the store THROUGH the manifest
-  *    ([[KvStoreSink.committedFiles]]), so a crashed job (no swap) or a
-  *    losing speculative attempt (file never published) is invisible —
+  *    manifest listing them commits as a fresh version via temp-write +
+  *    non-overwriting rename (`Sinks.commitManifest`). Readers resolve
+  *    the store THROUGH the manifest ([[KvStoreSink.committedFiles]]),
+  *    so a crashed job (no manifest commit) or a losing speculative
+  *    attempt (file never published) is invisible —
   *    the all-or-nothing batch visibility the reference's row-at-a-time
   *    writes cannot give.
   *
@@ -54,12 +60,12 @@ object KvStoreSink {
   /** Absolute paths of the committed data files — resolved through the
     * manifest, never by listing the directory (staged or orphaned files
     * are invisible by construction). */
-  def committedFiles(path: String): Seq[String] = {
-    val m = Paths.get(path, "MANIFEST")
-    if (!Files.exists(m)) Nil
-    else Files.readString(m).split("\n").filter(_.nonEmpty).toIndexedSeq
+  def committedFiles(path: String): Seq[String] =
+    Sinks.readManifest(path).toSeq.flatMap(m => manifestNames(m._2))
       .map(f => s"$path/$f")
-  }
+
+  private[sources] def manifestNames(text: String): Seq[String] =
+    text.split("\n").filter(_.nonEmpty).toIndexedSeq
 }
 
 class KvStoreTable(path: String) extends Table with SupportsWrite {
@@ -91,46 +97,35 @@ class KvBatchWrite(path: String, schema: StructType, queryId: String,
     s"kvstore expects (k BIGINT, v STRING, cents BIGINT), got $schema")
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    Files.createDirectories(Paths.get(path, ".staging"))
-    new KvWriterFactory(path, queryId)
+    Fs.mkdirs(s"$path/.staging")
+    new KvWriterFactory(path, queryId, new SerializableConfiguration(Fs.conf))
   }
 
   /** Driver-side publish: move exactly the committed attempts' files
-    * live, then swap the manifest atomically. The manifest write is the
+    * live, then commit the next manifest version. That commit is the
     * commit point — a crash anywhere before it leaves only invisible
     * staged/live-but-unlisted files. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val names = messages.collect { case m: KvCommitMessage => m.fileName }
-    names.foreach { f =>
-      Files.move(Paths.get(path, ".staging", f), Paths.get(path, f),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
-    val prior =
-      if (truncate) Nil
-      else KvStoreSink.committedFiles(path).map(p => Paths.get(p).getFileName.toString)
-    val tmp = Paths.get(path, "MANIFEST.tmp")
-    Files.writeString(tmp, (prior ++ names).mkString("\n"))
-    Files.move(tmp, Paths.get(path, "MANIFEST"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    deleteStaging()
+    names.foreach(f => Fs.replace(s"$path/.staging/$f", s"$path/$f"))
+    val (v, priorText) = Sinks.readManifest(path).getOrElse((-1L, ""))
+    val prior = if (truncate) Nil else KvStoreSink.manifestNames(priorText)
+    Sinks.commitManifest(path, v + 1, (prior ++ names).mkString("\n"))
+    Fs.delete(s"$path/.staging")
   }
 
   /** Job-level abort: every staged attempt file dies; the manifest (and
     * therefore the readable store) is untouched. */
-  override def abort(messages: Array[WriterCommitMessage]): Unit = deleteStaging()
-
-  private def deleteStaging(): Unit = {
-    val st = Paths.get(path, ".staging")
-    if (Files.exists(st)) {
-      Files.walk(st).sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    Fs.delete(s"$path/.staging")
 }
 
-class KvWriterFactory(path: String, queryId: String) extends DataWriterFactory {
+/** Ships the driver's Hadoop conf to the executors, which have no
+  * session to resolve it from. */
+class KvWriterFactory(path: String, queryId: String, conf: SerializableConfiguration)
+    extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new KvDataWriter(path, queryId, partitionId, taskId)
+    new KvDataWriter(path, queryId, partitionId, taskId, conf)
 }
 
 /** One task attempt's writer: rows stream to a file named by (query id,
@@ -140,10 +135,13 @@ class KvWriterFactory(path: String, queryId: String) extends DataWriterFactory {
   * it twice in the manifest. The write's queryId (a UUID) scopes the name
   * globally. The file only becomes eligible for publishing via this
   * attempt's commit message. */
-class KvDataWriter(path: String, queryId: String, partitionId: Int, taskId: Long)
+class KvDataWriter(path: String, queryId: String, partitionId: Int, taskId: Long,
+                   conf: SerializableConfiguration)
     extends DataWriter[InternalRow] {
   private val fileName = s"part-$queryId-$partitionId-$taskId.jsonl"
-  private val out = Files.newBufferedWriter(Paths.get(path, ".staging", fileName))
+  private val staged = s"$path/.staging/$fileName"
+  private val out = new BufferedWriter(
+    new OutputStreamWriter(Fs.create(staged, conf.value), UTF_8))
   private var rows = 0L
 
   private def esc(s: String): String =
@@ -175,7 +173,7 @@ class KvDataWriter(path: String, queryId: String, partitionId: Int, taskId: Long
 
   override def abort(): Unit = {
     out.close()
-    Files.deleteIfExists(Paths.get(path, ".staging", fileName))
+    Fs.delete(staged, conf.value)
   }
 
   override def close(): Unit = ()

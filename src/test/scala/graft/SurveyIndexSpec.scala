@@ -34,19 +34,35 @@ class SurveyIndexSpec extends AnyFunSuite {
     assert((o -- q).isEmpty, s"oracles without a query: ${(o -- q).toSeq.sorted}")
   }
 
-  test("llm/ operator code never touches java.nio.file (cluster portability)") {
-    // Operator store/scratch paths must go through the Hadoop FS client
-    // (util.Fs) so they work when the path is HDFS/object-store, not a
-    // driver-local disk (VERDICT r13 wrong-item 2). java.nio.ByteBuffer
-    // etc. remain fine — only the *.file package is the local-FS leak.
+  test("src/main touches files only through util.Fs (cluster portability)") {
+    // Program paths must go through the Hadoop FS client (util.Fs) so
+    // they work when the path is HDFS/object-store, not a driver-local
+    // disk (VERDICT r13 wrong-item 2), and so util.Fs stays the one place
+    // file mutations can be observed. java.nio.ByteBuffer etc. remain
+    // fine — only the local-FS APIs and a session-less Hadoop conf leak.
+    // Exempt: the local-disk drivers and dev tools, and RunCache's probe
+    // of the local shuffle volume's free space. util.Fs itself may build
+    // ONE default conf: its fallback for callers with no session at all.
     import scala.jdk.CollectionConverters._
-    val dir = Paths.get("src/main/scala/graft/llm")
-    val offenders = Files.walk(dir).iterator().asScala
+    val root = Paths.get("src/main/scala/graft")
+    val exempt = Set("Bench.scala", "Verify.scala", "util/RunCache.scala")
+    val newConf = "new Configuration\\(\\)".r
+    // the local-file classes, however they are imported or named
+    val local = "(File|FileInputStream|FileOutputStream|FileReader|FileWriter|RandomAccessFile)"
+    val banned = Seq("java\\.nio\\.file".r, s"java\\.io\\.$local\\b".r,
+      s"java\\.io\\.\\{[^}]*\\b$local\\b".r, "import java\\.n?io\\._".r,
+      s"\\bnew $local\\(".r, newConf)
+    val offenders = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .filter(f => new String(Files.readAllBytes(f), "UTF-8")
-        .contains("java.nio.file"))
-      .map(_.toString).toSeq
-    assert(offenders.isEmpty,
-      s"java.nio.file in llm/ operator code: $offenders — use graft.util.Fs")
+      .map(f => root.relativize(f).toString -> f)
+      .filterNot { case (rel, _) => exempt(rel) || rel.startsWith("tools/") }
+      .flatMap { case (rel, f) =>
+        val src = new String(Files.readAllBytes(f), "UTF-8")
+        banned.filter { b =>
+          val n = b.findAllIn(src).size
+          n > (if (rel == "util/Fs.scala" && b == newConf) 1 else 0)
+        }.map(b => s"$rel: $b")
+      }.toSeq
+    assert(offenders.isEmpty, s"local file access outside util.Fs: $offenders")
   }
 }

@@ -9,7 +9,7 @@
 # output gets a sidecar <out>.prov.json recording the commit, whether the
 # working tree was clean, and the measurement regime. The tree is checked
 # BEFORE and AFTER the run — a sample taken while the tree was dirty or
-# while HEAD moved is stamped clean=false and the fold (scale_r14.py)
+# while HEAD moved is stamped clean=false and the fold (scale_r16.py)
 # refuses to label it as a HEAD measurement. The dirty pathspec is the
 # MEASURED surface only (src/, build.sbt, the runner) -- an edit to a
 # fold/analysis script during a run must not poison the record.
